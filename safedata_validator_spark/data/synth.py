@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from safedata_validator_spark.engine.common import local_table
+
 SEED = 42
 BASE_TS = "2024-01-01 00:00:00"
 
@@ -69,14 +71,15 @@ TAXONOMY_NODES = [
 
 
 def dims(spark: SparkSession) -> dict[str, DataFrame]:
-    roles = spark.createDataFrame(
+    roles = local_table(
+        spark,
         [(r, f"the {r} role", i) for i, r in enumerate(ROLES)],
         "role string, description string, ordered_idx int",
     )
-    tools = spark.createDataFrame(TOOLS, "tool string, category string")
-    aliases = spark.createDataFrame(TOOL_ALIASES, "alias string, tool string")
-    nodes = spark.createDataFrame(
-        TAXONOMY_NODES, "node_id int, parent_id int, name string, rank string, status string"
+    tools = local_table(spark, TOOLS, "tool string, category string")
+    aliases = local_table(spark, TOOL_ALIASES, "alias string, tool string")
+    nodes = local_table(
+        spark, TAXONOMY_NODES, "node_id int, parent_id int, name string, rank string, status string"
     )
     return {"roles": roles, "tools": tools, "tool_aliases": aliases, "taxonomy_nodes": nodes}
 

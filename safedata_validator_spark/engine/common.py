@@ -1,14 +1,24 @@
-"""Shared violation-row construction helpers.
+"""Shared violation-row construction helpers, driver-local tables and SQL
+text escaping.
 
 Violations are data, not log lines (the reference's verdict mechanism is a
 counting log handler, logger.py:68-107; here it is a DataFrame with a fixed
 schema so counting, scoping and persistence are relational).
+
+Driver-local tables (declared rule grids, level lists, dimensions, the
+re-injected shared aggregates) are Catalyst ``LocalRelation``s: their rows
+live in the driver JVM, so a job that scans or broadcasts one reads them
+there. ``spark.createDataFrame(list)`` would instead make a pickled Python
+RDD, and every job touching it would start Python workers to unpickle rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from safedata_validator_spark.rules.model import Rule
 
@@ -55,4 +65,45 @@ def as_violations(
 
 
 def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_DDL)
+    return local_table(spark, [], VIOLATION_DDL)
+
+
+def local_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Rows built in Python, with schema ``ddl``, as a ``LocalRelation``: they
+    travel to the JVM as one Arrow table, which Spark keeps as a local
+    relation below ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB by default). A value of the wrong type raises, as
+    ``createDataFrame`` with a schema does."""
+    schema = T.StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def collect_local(df: DataFrame, max_rows: int | None = None) -> DataFrame | None:
+    """Run ``df`` and keep its rows as a ``LocalRelation`` without passing
+    them through Python: the rows are collected into the driver JVM and
+    wrapped there, so arrays, maps and sketch values stay exact, and a later
+    ``collect()`` of the result runs no job. Returns None, having collected
+    at most ``max_rows + 1`` rows, when ``df`` has more than ``max_rows``."""
+    src = df if max_rows is None else df.limit(max_rows + 1)
+    # toDF: a typed Dataset (spark.range's is of longs) collects no Rows
+    jrows = src._jdf.toDF().collectAsList()
+    if max_rows is not None and jrows.size() > max_rows:
+        return None
+    spark = df.sparkSession
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, df._jdf.schema()), spark)
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal (backslash escapes, the
+    parser's default)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from safedata_validator_spark.engine.common import sql_ident, sql_string
+
 NUMERIC_TYPES = (
     T.ByteType,
     T.ShortType,
@@ -106,10 +108,10 @@ def profile_aggs(
     aggs = []
     for c in columns:
         dt = fields[c]
-        q = f"`{c}`"
+        q = sql_ident(c)
         is_str = isinstance(dt, T.StringType)
         is_num = _is_numeric(dt)
-        na = na_sentinel.replace("'", "''")
+        na = sql_string(na_sentinel)
 
         def e(sql: str, alias: str):
             aggs.append(F.expr(sql).alias(f"{c}__{alias}"))
@@ -122,7 +124,7 @@ def profile_aggs(
                 "THEN 1 ELSE 0 END)",
                 "n_blank",
             )
-            e(f"sum(CASE WHEN ({q} = '{na}') THEN 1 ELSE 0 END)", "n_na")
+            e(f"sum(CASE WHEN ({q} = {na}) THEN 1 ELSE 0 END)", "n_na")
         else:
             e("CAST(0 AS BIGINT)", "n_blank")
             e("CAST(0 AS BIGINT)", "n_na")
@@ -175,15 +177,17 @@ def profile_long(wide: DataFrame, columns: list[str]) -> DataFrame:
     (scope, column, metric...) profile shape — driver-free explode."""
     # one parsed expression (vs N struct() Column builds) — same tree
     def struct_of(c: str) -> str:
-        cq = c.replace("'", "''")
+        def a(metric: str) -> str:
+            return sql_ident(f"{c}__{metric}")
+
         return (
-            f"named_struct('column', '{cq}', 'n', `{c}__n`, "
-            f"'n_null', `{c}__n_null`, 'n_blank', `{c}__n_blank`, "
-            f"'n_na', `{c}__n_na`, 'n_distinct', `{c}__n_distinct`, "
-            f"'min_value', `{c}__min`, 'max_value', `{c}__max`, "
-            f"'mean', `{c}__mean`, 'stddev', `{c}__stddev`, "
-            f"'quantiles', `{c}__quantiles`, "
-            f"'n_nonmidnight', `{c}__n_nonmidnight`)"
+            f"named_struct('column', {sql_string(c)}, 'n', {a('n')}, "
+            f"'n_null', {a('n_null')}, 'n_blank', {a('n_blank')}, "
+            f"'n_na', {a('n_na')}, 'n_distinct', {a('n_distinct')}, "
+            f"'min_value', {a('min')}, 'max_value', {a('max')}, "
+            f"'mean', {a('mean')}, 'stddev', {a('stddev')}, "
+            f"'quantiles', {a('quantiles')}, "
+            f"'n_nonmidnight', {a('n_nonmidnight')})"
         )
 
     per_col_structs = F.expr("array(" + ", ".join(struct_of(c) for c in columns) + ")")

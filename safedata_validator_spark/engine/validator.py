@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from safedata_validator_spark.engine import checkpoint as ckpt
-from safedata_validator_spark.engine.common import empty_violations, entity_col
+from safedata_validator_spark.engine.common import (
+    collect_local,
+    empty_violations,
+    entity_col,
+    local_table,
+)
 from safedata_validator_spark.rules.compilers import compile_row_rule
 from safedata_validator_spark.rules.model import ERROR, Rule, RuleSet
 from safedata_validator_spark.rules import registry
@@ -130,10 +135,35 @@ class ValidationEngine:
         parts: list[DataFrame] = []
         if row_rules:
             parts.append(self._row_violations(df, ruleset, row_rules))
-        parts.extend(self._plan_violations(df, ruleset, plan_rules, dims, shared))
+        adj_parts, handled = self._adjacency_violations(df, ruleset, plan_rules)
+        parts.extend(adj_parts)
+        parts.extend(self._plan_violations(df, ruleset, plan_rules, dims, handled, shared))
         if not parts:
             return empty_violations(df.sparkSession)
         return reduce(lambda a, b: a.unionByName(b), parts)
+
+    def _adjacency_violations(
+        self, df: DataFrame, ruleset: RuleSet, plan_rules: list[Rule]
+    ) -> tuple[list[DataFrame], set[int]]:
+        """Adjacency fusion: ALL adjacency rules sharing (group, order)
+        evaluate in ONE projection over ONE pairs plan — a single consumer
+        guarantees the self-join runs once (separate consumers defeat
+        ReuseExchange under column pruning). Needs no shared aggregate.
+        Returns (parts, ids of the rules evaluated)."""
+        from collections import defaultdict
+
+        from safedata_validator_spark.engine import ordering
+
+        adj = [r for r in plan_rules if r.rule_type in ("monotone", "transition_grammar")]
+        by_key: dict[tuple, list[Rule]] = defaultdict(list)
+        for r in adj:
+            by_key[ordering.rule_pair_key(r, ruleset)].append(r)
+        parts = []
+        for (group, order, method, block_size), rules in by_key.items():
+            values = sorted({r.column for r in rules})
+            pairs = ordering.build_pairs(df, ruleset, group, order, values, block_size, method)
+            parts.append(ordering.fused_pairs_violations(pairs, rules, group, order))
+        return parts, {id(r) for r in adj}
 
     def _plan_violations(
         self,
@@ -141,14 +171,14 @@ class ValidationEngine:
         ruleset: RuleSet,
         plan_rules: list[Rule],
         dims: dict,
+        handled: set[int],
         shared: dict[str, DataFrame] | None = None,
     ) -> list[DataFrame]:
-        """Evaluate plan-level rules with cross-rule fusion. Rules that share
-        a relational shape share ONE pass over the data:
+        """Evaluate the plan-level rules whose ids are not in ``handled``
+        (the adjacency rules, which ``_adjacency_violations`` evaluates in
+        ONE projection over one adjacent-pairs plan) with cross-rule fusion.
+        Rules that share a relational shape share ONE pass over the data:
 
-        * monotone + transition_grammar with the same (group, order,
-          block_size) evaluate in ONE projection over one adjacent-pairs
-          plan (one bounded window + one boundary stitch for all of them);
         * sequential + unique_key over (group, order) share the
           conversation-level hash-sum screen (fast path, inside validate())
           or one key-count aggregation (standalone / method='exact'), the
@@ -162,27 +192,11 @@ class ValidationEngine:
         cost — this is the engine's equivalent of the reference's single-pass
         multi-statistic design (field.py:1361-1415), applied across rules.
         """
-        from collections import defaultdict
-
         from safedata_validator_spark.engine import extents, ordering, referential, uniqueness
 
         shared = shared or {}
+        handled = set(handled)
         parts: list[DataFrame] = []
-        handled: set[int] = set()
-
-        # -- adjacency fusion ------------------------------------------------
-        # ALL adjacency rules sharing (group, order) evaluate in ONE projection
-        # over ONE pairs plan — a single consumer guarantees the self-join runs
-        # once (separate consumers defeat ReuseExchange under column pruning)
-        adj = [r for r in plan_rules if r.rule_type in ("monotone", "transition_grammar")]
-        by_key: dict[tuple, list[Rule]] = defaultdict(list)
-        for r in adj:
-            by_key[ordering.rule_pair_key(r, ruleset)].append(r)
-        for (group, order, method, block_size), rules in by_key.items():
-            values = sorted({r.column for r in rules})
-            pairs = ordering.build_pairs(df, ruleset, group, order, values, block_size, method)
-            parts.append(ordering.fused_pairs_violations(pairs, rules, group, order))
-            handled.update(id(r) for r in rules)
 
         # -- sequential + unique_key fusion -----------------------------------
         # Fast path (inside validate(), where the shared per-scope aggregate
@@ -284,37 +298,29 @@ class ValidationEngine:
         ``scope_rows`` (scope, n_rows) may be supplied from the run's shared
         per-scope aggregate to avoid a dedicated fact pass."""
         spark = df.sparkSession
-        counts = violations.groupBy("scope", "rule_id", "severity").agg(
-            F.count(F.lit(1)).alias("n_failed")
-        )
         if scope_rows is None:
             scope_rows = df.groupBy(F.expr(ruleset.scope).cast("string").alias("scope")).agg(
                 F.count(F.lit(1)).alias("n_rows")
             )
-        declared = spark.createDataFrame(
-            [(r.rule_id, r.severity) for r in ruleset.rules], "rule_id string, severity string"
+        declared = local_table(
+            spark, [(r.rule_id, r.severity) for r in ruleset.rules], "rule_id string, severity string"
         )
-        # ONE reference to the violations subtree: the declared grid
-        # full-outer-joins the observed counts (derived rule ids such as
-        # '.alias'/'.unused' enter through the counts side), then row counts
-        # attach from the (driver-local) scope_rows. The previous
-        # grid-union-then-join shape embedded the violations plan twice,
-        # doubling every fact scan when violations was not persisted.
-        # Scope joins are NULL-SAFE: a scope expression may evaluate to NULL
-        # and NULL is a verdict partition like any other.
+        # ONE reference to the violations subtree and ONE shuffle: the
+        # declared grid (scopes × rules, driver-local) is unioned with the
+        # violation rows, each grid row counting 0 and each violation 1, and
+        # a single aggregation by (scope, rule_id, severity) zero-fills clean
+        # rules while derived rule ids (e.g. '.alias'/'.unused') enter
+        # through the violation side. Row counts then attach from the
+        # (driver-local) scope_rows. Grouping puts NULL scopes together, and
+        # the scope join is NULL-SAFE: a scope expression may evaluate to
+        # NULL and NULL is a verdict partition like any other.
+        key = ["scope", "rule_id", "severity"]
         grid = scope_rows.select("scope").crossJoin(F.broadcast(declared))
-        g, c = grid.alias("g"), counts.alias("c")
-        merged = g.join(
-            c,
-            F.col("g.scope").eqNullSafe(F.col("c.scope"))
-            & (F.col("g.rule_id") == F.col("c.rule_id"))
-            & (F.col("g.severity") == F.col("c.severity")),
-            "full_outer",
-        ).select(
-            F.coalesce(F.col("g.scope"), F.col("c.scope")).alias("scope"),
-            F.coalesce(F.col("g.rule_id"), F.col("c.rule_id")).alias("rule_id"),
-            F.coalesce(F.col("g.severity"), F.col("c.severity")).alias("severity"),
-            F.col("c.n_failed").alias("n_failed"),
+        merged = (
+            grid.select(*key, F.lit(0).alias("__hit"))
+            .unionByName(violations.select(*key, F.lit(1).alias("__hit")))
+            .groupBy(*key)
+            .agg(F.sum("__hit").alias("n_failed"))
         )
         sr = scope_rows.withColumnRenamed("scope", "__sr_scope")
         return (
@@ -353,27 +359,24 @@ class ValidationEngine:
                 width += 16
         return max(width, 64)
 
-    def _localize(self, agg: DataFrame) -> tuple[DataFrame, bool, list | None]:
-        """Materialize a (by-design tiny) aggregate as a driver-local table so
-        every downstream consumer reads rows, never the build plan. Falls back
-        to a persisted distributed plan when the aggregate exceeds the row or
-        byte cap. The plan is persisted BEFORE the probing collect, so the
-        fallback's first consumer reuses the already-computed partitions
-        instead of recomputing the whole aggregation. Also returns the
-        collected rows on the local path so callers that need driver-side
-        values (the sequential fast path's order maxima) read them directly
-        instead of re-collect()ing the local table — which runs one more
-        (pointless) local job per consumer."""
+    def _localize(self, agg: DataFrame) -> tuple[DataFrame, bool]:
+        """Materialize a (by-design tiny) aggregate as a driver-local table
+        (``collect_local``) so every downstream consumer reads rows, never the
+        build plan. Falls back to a persisted distributed plan when the
+        aggregate exceeds the row or byte cap. The plan is persisted BEFORE
+        the probing collect, so the fallback's first consumer reuses the
+        already-computed partitions instead of recomputing the whole
+        aggregation. Returns (table, is_local)."""
         cap = min(
             self.localize_cap,
             max(1, self.localize_bytes_cap // self._est_row_width(agg.schema)),
         )
         plan = agg.persist()
-        rows = plan.limit(cap + 1).collect()
-        if len(rows) > cap:
-            return plan, False, None
+        local = collect_local(plan, max_rows=cap)
+        if local is None:
+            return plan, False
         plan.unpersist()
-        return agg.sparkSession.createDataFrame(rows, agg.schema), True, rows
+        return local, True
 
     def validate(
         self,
@@ -384,15 +387,19 @@ class ValidationEngine:
         approx_distinct: bool = True,
         profile_columns: list[str] | None = None,
     ) -> RunResult:
-        """Full run with cross-output pass fusion. Fact passes, total:
+        """Full run with cross-output pass fusion. Fact reads, total seven
+        (pinned at run time by tests/test_plans.py):
 
-        1. fused row-rule scan (the only pass touching heavy text columns);
-        2. ONE per-scope aggregation = profiler sketches + extent min/max +
-           verdict row counts (persisted: rows = #scopes);
-        3. ONE stacked categorical-counts pass for every levels_audit /
-           ref_integrity column (persisted: rows ≈ Σ distinct values);
-        4. key-count shuffle shared by sequential + unique_key;
-        5-6. adjacency self-join (both sides), ALL adjacency rules fused.
+        1. ONE per-scope aggregation = profiler sketches + extent min/max +
+           verdict row counts (eager; rows = #scopes);
+        2. ONE stacked categorical-counts pass for every levels_audit /
+           ref_integrity column (eager; rows ≈ Σ distinct values);
+        3. fused row-rule scan (the only read touching heavy text columns);
+        4. conversation-level sequence screen shared by sequential +
+           unique_key;
+        5. drilldown rescan of the flagged conversations;
+        6-7. blocked-window adjacency: lag pass and block summary, ALL
+           adjacency rules fused.
 
         Everything else is broadcast joins / re-aggregation over the tiny
         shared aggregates — nothing re-reads the fact table.
@@ -404,8 +411,11 @@ class ValidationEngine:
         local table guarantees every downstream consumer reads the computed
         rows instead of replaying the fact scan inside broadcast-subquery
         jobs, which do not share adaptive query stages with the main action.
-        Should a categorical column turn out high-cardinality, the aggregate
-        falls back to a persisted distributed plan (``localize_cap`` rows).
+        The local tables are LocalRelations built in the JVM
+        (``collect_local``), so no job that reads them starts a Python
+        worker. Should a categorical column turn out high-cardinality, the
+        aggregate falls back to a persisted distributed plan
+        (``localize_cap`` rows).
         """
         from safedata_validator_spark.engine import extents as ext
         from safedata_validator_spark.engine import referential
@@ -482,30 +492,37 @@ class ValidationEngine:
             early_parts: list[DataFrame] = []
             if row_rules:
                 early_parts.append(self._row_violations(df, ruleset, row_rules))
-            scope_agg, was_local, scope_rows_local = scope_fut.result()
+            # the adjacency plan reads no shared aggregate either
+            adj_parts, handled = self._adjacency_violations(df, ruleset, plan_rules)
+            early_parts.extend(adj_parts)
+            scope_agg, was_local = scope_fut.result()
             cached = [] if was_local else [scope_agg]
             shared: dict[str, DataFrame] = {"scope_agg": scope_agg}
             if was_local and seq_orders:
-                # read the maxima from the ALREADY-collected rows — a
-                # .collect() on the local table would run one more job
+                # collecting a local table runs no job
+                maxima = scope_agg.select(*[f"__seqmax_{o}" for o in seq_orders]).collect()
                 shared["order_max"] = {
                     o: max(
-                        (r[f"__seqmax_{o}"] for r in scope_rows_local
-                         if r[f"__seqmax_{o}"] is not None),
+                        (r[f"__seqmax_{o}"] for r in maxima if r[f"__seqmax_{o}"] is not None),
                         default=None,
                     )
                     for o in seq_orders
                 }
             if cat_fut is not None:
-                cat_counts, cat_local, _ = cat_fut.result()
+                cat_counts, cat_local = cat_fut.result()
                 shared["cat_counts"] = cat_counts
                 if not cat_local:
                     cached.append(cat_counts)
 
         parts: list[DataFrame] = list(early_parts)
-        parts.extend(self._plan_violations(df, ruleset, plan_rules, dims, shared))
+        parts.extend(self._plan_violations(df, ruleset, plan_rules, dims, handled, shared))
+        # the union has one partition per partition of every part (about 30
+        # for the transcript rule set), and each task reading it deserializes
+        # the whole union's lineage; one shuffle of the (rare) violation rows
+        # gives every consumer — the verdict aggregate, a persisted copy, a
+        # file write — a few right-sized partitions instead
         viols = (
-            reduce(lambda a, b: a.unionByName(b), parts)
+            reduce(lambda a, b: a.unionByName(b), parts).repartition("rule_id", "entity")
             if parts
             else empty_violations(df.sparkSession)
         )

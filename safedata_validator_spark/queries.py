@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from safedata_validator_spark.engine.common import collect_local, local_table
 from safedata_validator_spark.functions import dedup as dd
 from safedata_validator_spark.functions import similarity as sim
 from safedata_validator_spark.functions import text as tx
@@ -305,7 +306,7 @@ DECLARED_EVENT_TYPES = ["click", "view", "purchase", "signup", "login"]
 
 def q_levels_audit_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    declared = spark.createDataFrame([(v,) for v in DECLARED_EVENT_TYPES], "event_type string")
+    declared = local_table(spark, [(v,) for v in DECLARED_EVENT_TYPES], "event_type string")
     used = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_rows"))
     undeclared = used.join(F.broadcast(declared), "event_type", "left_anti").select(
         "event_type", F.lit("undeclared").alias("problem"), "n_rows"
@@ -1579,9 +1580,7 @@ def q_url_audit_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = d.select("doc_id", injected.alias("text"))
     audit = urls.url_audit(docs, "doc_id", "text")
-    blocklist = spark.createDataFrame(
-        [(b,) for b in URL_BLOCKLIST], "domain string"
-    )
+    blocklist = local_table(spark, [(b,) for b in URL_BLOCKLIST], "domain string")
     kept = urls.filter_blocked_domains(docs, "doc_id", "text", blocklist).select(
         "doc_id", F.lit(True).alias("survived")
     )
@@ -3015,8 +3014,7 @@ def q_stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    rows = spark.table(qname).collect()
-    res = spark.createDataFrame(rows, out.schema)
+    res = collect_local(spark.table(qname))
     return res.select(F.col("id").alias("doc_id"), "is_dup", "keep_id")
 
 
@@ -3111,8 +3109,7 @@ def q_stream_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    rows = spark.table(qname).collect()
-    hist_df = spark.createDataFrame(rows, hist.schema)
+    hist_df = collect_local(spark.table(qname))
     base = histogram(
         ev, "value", DRIFT_STREAM_LO, DRIFT_STREAM_HI, DRIFT_STREAM_BINS
     ).select("bucket", "n")
@@ -3227,8 +3224,7 @@ def q_stream_sequence_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    rows = spark.table(qname).collect()
-    res = spark.createDataFrame(rows, out.schema)
+    res = collect_local(spark.table(qname))
     return res.orderBy("conv_id", "turn_idx", "rule_id", "message")
 
 

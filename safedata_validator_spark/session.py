@@ -92,6 +92,19 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # One validate() generates about 120 distinct classes, each compiled
+        # once for the driver and once for the executor's class loader; the
+        # default 100-entry codegen cache evicts them within the run, so
+        # later actions recompiled (and the JIT re-warmed) classes compiled
+        # moments before. A static conf: it takes effect with the first
+        # session of the JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # PySpark's DataFrame call-site capture costs several py4j round
+        # trips, a stack walk and an IPython import attempt per API call,
+        # and building the engine's plans makes thousands of such calls per
+        # run. Its only product is the Python file:line in a failing
+        # query's error context; pass extra_conf to turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         builder = builder.master(master)

@@ -158,8 +158,77 @@ def test_full_validate_bounds_fact_scans(spark, dims, tmp_path):
         plan = _physical(d)
         n = plan.count("Scan parquet")
         assert n <= budget, f"{name}: {n} parquet scans (budget {budget})"
-    # stats derive entirely from the driver-local aggregate (LocalTableScan /
-    # ExistingRDD leaf — zero fact scans, asserted by the budget above)
+        # driver-local tables are LocalTableScans; a Python-RDD leaf would
+        # start Python workers in every job that reads it
+        assert "Scan ExistingRDD" not in plan, f"{name}: Python-RDD leaf in plan"
+    # stats derive entirely from the driver-local aggregate (a LocalTableScan
+    # leaf — zero fact scans, asserted by the budget above)
+
+
+def test_full_validate_reads_fact_table_seven_times(spark, dims, tmp_path):
+    """The run-time count behind the static budget above: materializing the
+    three outputs of one validate() run (violations persisted first, as a
+    caller reusing them would) runs exactly seven stages that read the whole
+    fact table — scope aggregate, categorical counts, row scan, sequence
+    screen, drilldown rescan, adjacency lag pass and block summary — and no
+    other stage reads all of it."""
+    from safedata_validator_spark.data.synth import transcripts_bad
+    from safedata_validator_spark.rules.presets import transcript_ruleset
+
+    src = str(tmp_path / "fact")
+    transcripts_bad(spark).write.parquet(src)
+    df = spark.read.parquet(src)
+    n_rows = df.count()
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+
+    def stage_inputs() -> dict[tuple[int, int], int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        stages = store.stageList(None, False, False, no_quantiles, None)
+        out = {}
+        for i in range(stages.size()):
+            st = stages.apply(i)
+            out[(st.stageId(), st.attemptId())] = st.inputRecords()
+        return out
+
+    before = stage_inputs()
+    res = ValidationEngine().validate(df, transcript_ruleset(), dims, with_stats=True)
+    res.violations.persist()
+    try:
+        for d in (res.violations, res.verdicts, res.stats):
+            d.write.format("noop").mode("overwrite").save()
+        new = {k: v for k, v in stage_inputs().items() if k not in before}
+    finally:
+        res.violations.unpersist(blocking=True)
+        res.unpersist()
+    full = [k for k, v in new.items() if v >= n_rows]
+    assert len(full) == 7, f"{len(full)} stages read the whole table: {sorted(full)}"
+    assert all(new[k] == n_rows for k in full)
+
+
+def test_full_validate_violations_end_in_one_exchange(spark, dims, tmp_path):
+    """validate() hands its violations over hash-partitioned: the union of
+    all rule parts ends in ONE exchange on (rule_id, entity), so a consumer
+    reads at most spark.sql.shuffle.partitions partitions instead of one per
+    partition of every part (each of whose tasks deserializes the lineage of
+    the whole union)."""
+    from safedata_validator_spark.data.synth import transcripts_bad
+    from safedata_validator_spark.rules.presets import transcript_ruleset
+
+    src = str(tmp_path / "fact")
+    transcripts_bad(spark).write.parquet(src)
+    df = spark.read.parquet(src)
+    res = ValidationEngine().validate(df, transcript_ruleset(), dims, with_stats=True)
+    assert _physical(res.violations).count("Exchange hashpartitioning(rule_id") == 1
+    res.violations.persist()
+    try:
+        res.violations.write.format("noop").mode("overwrite").save()
+        n_parts = res.violations._jdf.rdd().getNumPartitions()
+    finally:
+        res.violations.unpersist(blocking=True)
+        res.unpersist()
+    assert n_parts <= int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def test_no_python_row_udfs_anywhere(spark, dims):

@@ -39,6 +39,23 @@ def test_profile_exact_against_pandas(spark):
     assert x["quantiles"][0] == pytest.approx(30.0)  # exact median of 5 values
 
 
+def test_profile_escapes_identifiers_and_sentinel(spark):
+    """Column names holding a backtick, quote or backslash, and an NA
+    sentinel holding a backslash, reach the parsed SQL escaped."""
+    df = spark.createDataFrame(
+        [("N\\A", "x"), ("NA", "N\\A"), (None, "N\\A"), ("N\\A", "")],
+        "`a``b` string, `c'\\d` string",
+    )
+    got = {
+        r["column"]: r
+        for r in profile(df, na_sentinel="N\\A", approx_distinct=False).collect()
+    }
+    assert set(got) == {"a`b", "c'\\d"}
+    assert (got["a`b"]["n"], got["a`b"]["n_null"], got["a`b"]["n_na"]) == (4, 1, 2)
+    assert got["a`b"]["n_distinct"] == 2
+    assert (got["c'\\d"]["n_na"], got["c'\\d"]["n_blank"]) == (2, 1)
+
+
 def test_profile_is_single_stage_scan(spark):
     """The fused profile must not multiply scans: the optimized plan reads the
     source once (one scan node), with all metrics as one aggregate."""
